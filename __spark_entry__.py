@@ -54,9 +54,10 @@ def _par(df: DataFrame) -> DataFrame:
     cannot split them: every expensive projection (md5 token hashing,
     higher-order array kernels, 64-dim dot products) otherwise runs in
     ONE task while the rest of the cluster idles (guide §2.5 "input
-    skew: one huge unsplittable file"). One cheap round-robin shuffle of
-    the raw rows buys full parallelism for everything downstream
-    (measured: simhash_32 7.9 s → 0.8 s at sf1.0/local[32]).
+    skew: one huge unsplittable file"). One cheap hash repartition on
+    the full row (see ``util.spread_scan``) buys full parallelism for
+    everything downstream (measured: simhash_32 7.9 s → 0.8 s at
+    sf1.0/local[32]).
 
     Scale-adaptive, not a local[32] constant: the target is the
     session's default parallelism, and inputs that already provide

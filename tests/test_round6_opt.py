@@ -41,32 +41,111 @@ def test_cc_driver_matches_distributed(spark):
 
 
 def test_nearest_cell_kernel_matches_jvm(spark):
+    """Kernel and JVM crossJoin paths agree on the same input, including
+    cells whose length differs from the rows (``zip_with`` pads with
+    NULL, so the score is NULL) and one batch mixing row lengths."""
     import upgini_spark.functions.similarity as SIM
 
-    df = spark.createDataFrame(
-        [(i, [float((i * 7 + d * 3) % 11) - 5.0 for d in range(8)])
-         for i in range(50)] + [(99, [0.0] * 8)],  # zero vector -> NULL score
-        "vid long, v array<double>",
+    def vecs(i, dim, a=7, b=3, mod=11):
+        return [float((i * a + d * b) % mod) - mod // 2 for d in range(dim)]
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "vid long, v array<double>")
+
+    def cents(dims):
+        return spark.createDataFrame(
+            [(c, [float((c * 5 + d) % 7) - 3.0 for d in range(dim)])
+             for c, dim in enumerate(dims)],
+            "cell int, cvec array<double>",
+        )
+
+    rows8 = [(i, vecs(i, 8)) for i in range(50)] + [(99, [0.0] * 8)]
+    mixed = (
+        [(i, vecs(i, 8)) for i in range(30)]
+        + [(100 + i, vecs(i, 16, 5, 2, 13)) for i in range(30)]
+        + [(200, None), (201, [0.0] * 16)]
     )
-    cent = spark.createDataFrame(
-        [(c, [float((c * 5 + d) % 7) - 3.0 for d in range(8)])
-         for c in range(6)],
-        "cell int, cvec array<double>",
+    cases = [
+        (frame(rows8), cents([8] * 6)),  # zero vector -> NULL score
+        (frame(rows8), cents([4] * 6)),  # shorter cells
+        (frame(rows8), cents([16] * 6)),  # longer cells
+        # one batch holding 8- and 16-dim rows against cells of both
+        (frame(mixed).coalesce(1), cents([16, 8, 16, 8, 8, 16])),
+    ]
+    for df, cent in cases:
+        rows = sorted(cent.collect(), key=lambda r: int(r["cell"]))
+        via_kernel = SIM._nearest_cell_kernel(df, rows, "v").collect()
+        # force the JVM broadcast-join path regardless of threshold
+        old = SIM._KERNEL_MIN_WORK
+        SIM._KERNEL_MIN_WORK = 10**9
+        try:
+            via_jvm = SIM._nearest_cell(df, cent, "v").collect()
+        finally:
+            SIM._KERNEL_MIN_WORK = old
+        assert len(via_kernel) == len(via_jvm) == df.count()
+        key = lambda r: r["vid"]  # noqa: E731
+        for a, b in zip(sorted(via_kernel, key=key), sorted(via_jvm, key=key)):
+            assert a["vid"] == b["vid"]
+            assert a["cell"] == b["cell"], (a["vid"], a["cell"], b["cell"])
+            assert a["v"] == b["v"]
+
+
+def test_nearest_subcell_kernel_matches_jvm(spark):
+    """The L2 kernel against the JVM fold it replays: ``_l2sq`` over the
+    (row × cell) join, then ``min(struct(d, cell))`` — NULL distance
+    (mismatched length, NULL subvector) is the minimum, NaN the maximum,
+    ties to the smallest cell. One batch mixes length-3 and length-4
+    subvectors against codebooks holding cells of one and of both
+    lengths."""
+    import upgini_spark.functions.similarity as SIM
+
+    rows = []
+    for i in range(40):
+        for sub in range(2):
+            dim = 3 if (i + sub) % 2 else 4
+            rows.append(
+                (i, sub, [float((i * 7 + d * 3 + sub) % 9) - 4.0
+                          for d in range(dim)])
+            )
+    rows += [(50, 0, None), (50, 1, []), (51, 0, [float("nan")] * 3),
+             (51, 1, [1.0, 1.0, 1.0, 1.0])]
+    long_df = spark.createDataFrame(
+        rows, "__pid__ long, sub int, sv array<double>"
+    ).coalesce(1)
+    # sub 0: length-3 cells first, then length-4 ones (a length-3 row
+    # scores NULL — the minimum — against cell 2); sub 1: only length-3
+    # cells, so length-3 rows get a real argmin and cell 4 ties cell 2
+    cbrows = [
+        (0, 0, [0.5, -1.0, 1.0]),
+        (0, 1, [-2.0, 1.0, 0.0]),
+        (0, 2, [1.0, 0.0, -1.0, 2.0]),
+        (0, 3, [0.0, 2.0, -2.0, 0.0]),
+        (1, 0, [1.0, 0.0, -1.0]),
+        (1, 1, [-2.0, 1.0, 1.0]),
+        (1, 2, [0.5, -1.0, 1.0]),
+        (1, 3, [3.0, 3.0, -3.0]),
+        (1, 4, [0.5, -1.0, 1.0]),
+    ]
+    cb = spark.createDataFrame(cbrows, "sub int, cell int, cvec array<double>")
+
+    # repr: NaN subvectors must compare equal to themselves
+    got = {
+        (r["__pid__"], r["sub"]): (r["cell"], repr(r["sv"]))
+        for r in SIM._nearest_subcell(long_df, cb).collect()
+    }
+    ref = (
+        long_df.join(F.broadcast(cb), on="sub")
+        .withColumn("d", SIM._l2sq(F.col("sv"), F.col("cvec")))
+        .groupBy("__pid__", "sub")
+        .agg(F.min(F.struct("d", "cell", F.col("sv").alias("v"))).alias("b"))
+        .collect()
     )
-    rows = sorted(cent.collect(), key=lambda r: int(r["cell"]))
-    via_kernel = SIM._nearest_cell_kernel(df, rows, "v").collect()
-    # force the JVM broadcast-join path regardless of threshold
-    old = SIM._KERNEL_MIN_WORK
-    SIM._KERNEL_MIN_WORK = 10**9
-    try:
-        via_jvm = SIM._nearest_cell(df, cent, "v").collect()
-    finally:
-        SIM._KERNEL_MIN_WORK = old
-    key = lambda r: r["vid"]  # noqa: E731
-    for a, b in zip(sorted(via_kernel, key=key), sorted(via_jvm, key=key)):
-        assert a["vid"] == b["vid"]
-        assert a["cell"] == b["cell"]
-        assert list(a["v"]) == list(b["v"])
+    want = {
+        (r["__pid__"], r["sub"]): (r["b"]["cell"], repr(r["b"]["v"]))
+        for r in ref
+    }
+    assert len(want) == len(rows)
+    assert got == want
 
 
 def test_pack_sequences_n_docs_gaps(spark):

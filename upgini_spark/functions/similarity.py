@@ -239,14 +239,120 @@ def embedding_near_dup_lsh(
 def _pyfold_norm(v: list[float]) -> float:
     """sqrt of the left-fold Σv² — the EXACT IEEE sequence of
     operators.binary._norm2 (acc = acc + v*v, then sqrt), evaluated
-    driver-side for broadcast-small centroid tables."""
+    per centroid by :func:`_argmax_cosine`."""
     acc = 0.0
     for x in v:
         acc = acc + x * x
     return math.sqrt(acc)
 
 
-# Arrow-kernel dispatch threshold: the mapInPandas assignment pays a
+# Bit-exact nearest-cell scoring — the single numpy home of the JVM
+# contract every Arrow kernel and driver-side Lloyd fit replays. Scores
+# accumulate PER DIMENSION in array order (``acc = acc + x*y`` — numpy
+# ufuncs round each multiply and add separately, no FMA), the identical
+# IEEE sequence as the ``F.aggregate`` left folds of
+# ``operators.binary._dot``/``_norm2`` and ``_l2sq``, so every score is
+# bit-identical and the oracles hash-match. Never use np.dot or pairwise
+# summation here. Each helper scans cells in ascending id order with a
+# (class, value) running best: class 0 = NULL, 2 = real, 3 = NaN.
+
+
+def _argmax_cosine(V, cells):
+    """Per-row ``max(struct(score, -cell))`` over ``cells`` (ascending
+    (cell, cvec) pairs) for the dense (n × dim) matrix ``V``: NULL
+    score (zero denom, or a cell whose length differs from the rows —
+    ``zip_with`` pads with NULL) < any real score < NaN, ties to the
+    smallest cell. Returns (cell, score, score_is_null) arrays."""
+    import numpy as np
+
+    n, dim = V.shape
+    acc = np.zeros(n)
+    for d in range(dim):
+        x = V[:, d]
+        acc = acc + x * x
+    vn = np.sqrt(acc)
+    best_cls = np.full(n, -1, dtype=np.int8)
+    best_s = np.full(n, np.nan)
+    best_cell = np.full(n, cells[0][0] if cells else 0, dtype=np.int64)
+    for c_id, cv in cells:
+        if len(cv) != dim:
+            s = np.full(n, np.nan)
+            cls = np.zeros(n, dtype=np.int8)
+        else:
+            acc = np.zeros(n)
+            for d in range(dim):
+                acc = acc + V[:, d] * cv[d]
+            denom = vn * _pyfold_norm(cv)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                s = acc / denom
+            isnull = denom == 0.0
+            # NULL scores are NaN here so the tie compare below is
+            # always False (two NULLs tie -> the smaller cell stays)
+            s = np.where(isnull, np.nan, s)
+            cls = np.where(isnull, 0, np.where(np.isnan(s), 3, 2)).astype(np.int8)
+        # strict > keeps the first (smallest) cell on every tie; NaN>NaN
+        # and NULL-vs-NULL both compare False
+        take = (cls > best_cls) | ((cls == best_cls) & (s > best_s))
+        best_cls = np.where(take, cls, best_cls)
+        best_s = np.where(take, s, best_s)
+        best_cell = np.where(take, c_id, best_cell)
+    return best_cell, best_s, best_cls == 0
+
+
+def _argmin_l2(V, cells):
+    """Per-row ``min(struct(dist, cell))`` — the L2 twin of
+    :func:`_argmax_cosine` over the ``_l2sq`` fold ``acc + (x-y)*(x-y)``:
+    a NULL distance (cell of a different length) is the MINIMUM, NaN the
+    maximum, ties to the smallest cell. Returns (cell, dist,
+    dist_is_null) arrays."""
+    import numpy as np
+
+    n, dim = V.shape
+    best_cls = np.full(n, 4, dtype=np.int8)
+    best_d = np.full(n, np.nan)
+    best_cell = np.full(n, cells[0][0] if cells else 0, dtype=np.int64)
+    for c_id, cv in cells:
+        if len(cv) != dim:
+            dd = np.full(n, np.nan)
+            cls = np.zeros(n, dtype=np.int8)
+        else:
+            acc = np.zeros(n)
+            for d in range(dim):
+                t = V[:, d] - cv[d]
+                acc = acc + t * t
+            dd = acc
+            cls = np.where(np.isnan(dd), 3, 2).astype(np.int8)
+        take = (cls < best_cls) | ((cls == best_cls) & (dd < best_d))
+        best_cls = np.where(take, cls, best_cls)
+        best_d = np.where(take, dd, best_d)
+        best_cell = np.where(take, c_id, best_cell)
+    return best_cell, best_d, best_cls == 0
+
+
+def _score_ragged(raw, cells, score):
+    """Apply the dense ``score`` helper to a batch of possibly NULL,
+    possibly ragged vectors. Spark's ``zip_with`` pads the shorter side
+    with NULL, so a row only scores for real against cells of its own
+    length: rows are grouped by length and each group is scored as its
+    own dense matrix. NULL vectors score NULL against every cell and
+    keep the smallest one."""
+    import numpy as np
+
+    n = len(raw)
+    best_cell = np.full(n, cells[0][0] if cells else 0, dtype=np.int64)
+    best_val = np.full(n, np.nan)
+    is_null = np.ones(n, dtype=bool)
+    by_len: dict[int, list[int]] = {}
+    for i, v in enumerate(raw):
+        if v is not None:
+            by_len.setdefault(len(v), []).append(i)
+    for idx in by_len.values():
+        V = np.array([raw[i] for i in idx], dtype=np.float64)
+        best_cell[idx], best_val[idx], is_null[idx] = score(V, cells)
+    return best_cell, best_val, is_null
+
+
+# Arrow-kernel dispatch threshold: the kernel assignment pays a
 # fixed Python/Arrow toll per stage, so it only wins when the per-row
 # score work is big enough — measured at sf1.0/local[32]: 142 cells x
 # 64 dims (9088 mul-adds/row) runs 2.6 s JVM vs 1.6 s kernel, while the
@@ -273,8 +379,6 @@ def _nearest_cell(df: DataFrame, cent: DataFrame, vec_col: str) -> DataFrame:
     (cells × dims ≥ _KERNEL_MIN_WORK), the score matrix is instead
     computed in the bit-exact Arrow kernel :func:`_nearest_cell_kernel`.
     Both paths produce identical scores and ties."""
-    from upgini_spark.operators.binary import _dot, _norm2
-
     rows = sorted(
         cent.select("cell", "cvec").collect(), key=lambda r: int(r["cell"])
     )
@@ -311,32 +415,24 @@ def _nearest_cell_kernel(df: DataFrame, rows: list, vec_col: str) -> DataFrame:
     matrices. ``rows`` is the collected (cell, cvec) table sorted by
     cell id.
 
-    The N×k score matrix is computed in an Arrow ``mapInPandas`` kernel
+    The N×k score matrix is computed in an Arrow ``mapInArrow`` kernel
     (guide §4.2 — hand whole batches to vectorized numpy instead of
     evaluating k interpreted higher-order dot-folds per row; measured
-    ~8× on the 20k×142 assignment at sf1.0). Bit-exactness contract: the
-    kernel accumulates dot products and norms PER DIMENSION in array
-    order (``acc = acc + x*y`` — numpy ufuncs round each multiply and
-    add separately, no FMA), i.e. the identical IEEE sequence as the
-    ``F.aggregate`` left fold in ``operators.binary._dot``/``_norm2``,
-    so every score is bit-identical to the previous crossJoin form and
-    the k-means oracles still hash-match. Spark's ordering semantics are
-    replicated per row: s=NULL (zero/NULL denom, NULL or
-    dimension-mismatched vectors) loses to any real score, NaN beats
-    every real score, and all ties fall to the smallest cell id.
+    ~8× on the 20k×142 assignment at sf1.0) by :func:`_argmax_cosine`
+    through :func:`_score_ragged`, which own the bit-exactness and
+    ordering contract, so every score and tie is identical to the
+    crossJoin form and the k-means oracles still hash-match. The key
+    and vector columns pass through as the input Arrow arrays: a pandas
+    round trip would turn NaN vector elements into NULLs.
 
     Per-row winners then collapse through the same struct-max
     aggregation as before (max over per-row maxes == max over all
     (row × cell) pairs), so rows sharing the non-vector keys still fold
     to one assignment with unchanged tie-break semantics."""
-    import numpy as np
-
     from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
     keys = [c for c in df.columns if c != vec_col]
-    cell_ids = [int(r["cell"]) for r in rows]
-    cvecs = [[float(x) for x in r["cvec"]] for r in rows]
-    cnorms = [_pyfold_norm(v) for v in cvecs]
+    cells = [(int(r["cell"]), [float(x) for x in r["cvec"]]) for r in rows]
 
     out_schema = StructType(
         [df.schema[k] for k in keys]
@@ -348,69 +444,22 @@ def _nearest_cell_kernel(df: DataFrame, rows: list, vec_col: str) -> DataFrame:
     )
 
     def assign(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        if not cell_ids:
-            return
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+        for batch in batches:
+            if batch.num_rows == 0 or not cells:
                 continue
-            raw = list(pdf[vec_col])
-            dims = {len(v) for v in raw if v is not None}
-            dim = max(dims) if dims else 0
-            # NULL or dimension-mismatched vectors score NULL against
-            # every cell (zip_with pads with null -> null dot) — model
-            # them as zero vectors, whose denom==0 path yields the same
-            # NULL score and smallest-cell fallback.
-            bad = np.array(
-                [v is None or len(v) != dim for v in raw], dtype=bool
+            vecs = batch.column(vec_col)
+            cell, s, is_null = _score_ragged(
+                list(vecs.to_numpy(zero_copy_only=False)), cells, _argmax_cosine
             )
-            V = np.zeros((n, dim), dtype=np.float64)
-            for i, v in enumerate(raw):
-                if not bad[i]:
-                    V[i, :] = v
-            V[bad, :] = 0.0
-            acc = np.zeros(n)
-            for d in range(dim):
-                x = V[:, d]
-                acc = acc + x * x
-            vn = np.sqrt(acc)
-            # per-row running best under Spark struct-max ordering:
-            # class 0 = NULL score (smallest), 2 = real, 3 = NaN (largest)
-            best_cls = np.full(n, -1, dtype=np.int8)
-            best_s = np.full(n, np.nan)
-            best_cell = np.full(n, cell_ids[0], dtype=np.int64)
-            for c_id, cv, cn in zip(cell_ids, cvecs, cnorms):
-                acc = np.zeros(n)
-                for d in range(len(cv)):
-                    acc = acc + V[:, d] * cv[d]
-                denom = vn * cn
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    s = acc / denom
-                isnull = denom == 0.0
-                # class-0 scores are NULL: force NaN so the tie compare
-                # below is always False (two NULLs tie -> smaller cell)
-                s = np.where(isnull, np.nan, s)
-                cls = np.where(
-                    isnull, 0, np.where(np.isnan(s), 3, 2)
-                ).astype(np.int8)
-                # iterate cells ASCENDING: strict > keeps the first
-                # (smallest) cell on every tie, matching max(struct(s,
-                # -cell)); NaN>NaN and NULL-vs-NULL both compare False
-                take = (cls > best_cls) | ((cls == best_cls) & (s > best_s))
-                best_cls = np.where(take, cls, best_cls)
-                best_s = np.where(take, s, best_s)
-                best_cell = np.where(take, c_id, best_cell)
-            out = pdf[keys].copy()
-            out[vec_col] = pdf[vec_col]
-            s_col = pd.Series(best_s)
-            s_col[best_cls == 0] = None
-            out["__s__"] = s_col
-            out["__cell__"] = best_cell.astype("int32")
-            yield out
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(k) for k in keys]
+                + [vecs, pa.array(s, mask=is_null), pa.array(cell.astype("int32"))],
+                names=out_schema.names,
+            )
 
-    scored = df.mapInPandas(assign, out_schema)
+    scored = df.mapInArrow(assign, out_schema)
     best = scored.groupBy(*keys).agg(
         F.max(
             F.struct(
@@ -450,6 +499,20 @@ def _round_half_up(v: float, dp: int) -> float:
     # python Decimal keeps the sign — normalize (the driver hash sees
     # the sign bit; the CLAUDE.md -0.0 class)
     return r + 0.0 if r == 0.0 else r
+
+
+def _lloyd_means(V, best_cell, cells, round_dp):
+    """One driver-side Lloyd update: each cell's per-dim member mean,
+    rounded HALF_UP like ``F.round(F.avg(x), round_dp)``. Cells that
+    lose every point drop out, ids stay sparse ascending."""
+    out = []
+    for c_id, _cv in cells:
+        mask = best_cell == c_id
+        cnt = int(mask.sum())
+        if cnt:
+            mean = V[mask].sum(axis=0) / cnt
+            out.append((c_id, [_round_half_up(float(x), round_dp) for x in mean]))
+    return out
 
 
 def collect_fit_matrix(fsample: DataFrame, n_sample: int, dim_hint: int):
@@ -494,72 +557,24 @@ def collect_fit_matrix(fsample: DataFrame, n_sample: int, dim_hint: int):
 def _kmeans_fit_driver(V, seed_vecs, n_cells, n_iter, round_dp):
     """Driver-side twin of the distributed Lloyd loop in
     :func:`kmeans_centroids` (engaged by :func:`collect_fit_matrix`):
-    the assignment replays `_nearest_cell_kernel`'s exact sequence —
-    per-dimension ``acc = acc + x*y`` folds, ``_pyfold_norm`` centroid
-    norms, NULL denom loses / NaN beats real / ties to the smallest
-    cell — and per-dim means round HALF_UP like ``F.round``; summation
-    order differences are absorbed by the round_dp quantum (the
-    documented partition-invariance contract). Cells that lose every
-    point drop out, ids stay sparse ascending."""
-    import numpy as np
-
+    the assignment is :func:`_argmax_cosine` on the clean sample matrix
+    and the update :func:`_lloyd_means`; summation order differences are
+    absorbed by the round_dp quantum (the documented
+    partition-invariance contract)."""
     cents = [
         (i, [float(x) for x in v]) for i, v in enumerate(seed_vecs[:n_cells])
     ]
-    n, dim = V.shape
-    acc = np.zeros(n)
-    for d in range(dim):
-        x = V[:, d]
-        acc = acc + x * x
-    vn = np.sqrt(acc)
     for _ in range(n_iter):
-        best_cls = np.full(n, -1, dtype=np.int8)
-        best_s = np.full(n, np.nan)
-        best_cell = np.full(n, cents[0][0] if cents else 0, dtype=np.int64)
-        for c_id, cv in cents:
-            if len(cv) != dim:
-                s = np.full(n, np.nan)
-                cls = np.zeros(n, dtype=np.int8)
-            else:
-                acc = np.zeros(n)
-                for d in range(dim):
-                    acc = acc + V[:, d] * cv[d]
-                cn = _pyfold_norm(cv)
-                denom = vn * cn
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    s = acc / denom
-                isnull = denom == 0.0
-                s = np.where(isnull, np.nan, s)
-                cls = np.where(
-                    isnull, 0, np.where(np.isnan(s), 3, 2)
-                ).astype(np.int8)
-            take = (cls > best_cls) | ((cls == best_cls) & (s > best_s))
-            best_cls = np.where(take, cls, best_cls)
-            best_s = np.where(take, s, best_s)
-            best_cell = np.where(take, c_id, best_cell)
-        new = []
-        for c_id, _cv in cents:
-            mask = best_cell == c_id
-            cnt = int(mask.sum())
-            if cnt == 0:
-                continue
-            mean = V[mask].sum(axis=0) / cnt
-            new.append(
-                (c_id, [_round_half_up(float(x), round_dp) for x in mean])
-            )
-        cents = new
+        best_cell = _argmax_cosine(V, cents)[0]
+        cents = _lloyd_means(V, best_cell, cents, round_dp)
     return cents
 
 
 def _pq_fit_driver(V, seed_vecs, m, dim, k_sub, n_iter, round_dp):
     """Driver-side twin of the distributed PQ Lloyd loop in
-    :func:`pq_codebooks`: per-subspace argmin-L2 with
-    `_nearest_subcell`'s exact per-dimension ``(x-y)^2`` folds and
-    min-struct ordering (ties to the smallest cell, NaN is the
-    maximum), HALF_UP per-dim means, and the same m×k_sub density
-    contract enforced after every step."""
-    import numpy as np
-
+    :func:`pq_codebooks`: per-subspace :func:`_argmin_l2` assignment and
+    :func:`_lloyd_means` update, with the same m×k_sub density contract
+    enforced after every step."""
     dm = dim // m
     cb = {
         j: [
@@ -568,43 +583,14 @@ def _pq_fit_driver(V, seed_vecs, m, dim, k_sub, n_iter, round_dp):
         ]
         for j in range(m)
     }
-    n = V.shape[0]
     subs = [V[:, j * dm:(j + 1) * dm] for j in range(m)]
     for _ in range(n_iter):
-        new_cb = {}
-        for j in range(m):
-            S = subs[j]
-            cells = cb[j]
-            best_cls = np.full(n, 4, dtype=np.int8)
-            best_d = np.full(n, np.nan)
-            best_cell = np.full(n, cells[0][0] if cells else 0, dtype=np.int64)
-            for c_id, cv in cells:
-                if len(cv) != dm:
-                    dd = np.full(n, np.nan)
-                    cls = np.zeros(n, dtype=np.int8)
-                else:
-                    acc = np.zeros(n)
-                    for d in range(dm):
-                        t = S[:, d] - cv[d]
-                        acc = acc + t * t
-                    dd = acc
-                    cls = np.where(np.isnan(dd), 3, 2).astype(np.int8)
-                take = (cls < best_cls) | ((cls == best_cls) & (dd < best_d))
-                best_cls = np.where(take, cls, best_cls)
-                best_d = np.where(take, dd, best_d)
-                best_cell = np.where(take, c_id, best_cell)
-            rows = []
-            for c_id, _cv in cells:
-                mask = best_cell == c_id
-                cnt = int(mask.sum())
-                if cnt == 0:
-                    continue
-                mean = S[mask].sum(axis=0) / cnt
-                rows.append(
-                    (c_id, [_round_half_up(float(x), round_dp) for x in mean])
-                )
-            new_cb[j] = rows
-        cb = new_cb
+        cb = {
+            j: _lloyd_means(
+                subs[j], _argmin_l2(subs[j], cb[j])[0], cb[j], round_dp
+            )
+            for j in range(m)
+        }
         if sum(len(v) for v in cb.values()) != m * k_sub:
             raise ValueError(
                 f"PQ codebook collapsed to "
@@ -853,32 +839,33 @@ def _subvectors(vec_col: str, m: int, dim: int) -> F.Column:
     )
 
 
-def _nearest_subcell(long_df: DataFrame, cb: DataFrame) -> DataFrame:
-    """Per-(row, subspace) argmin-L2 codebook assignment — ties to the
-    SMALLEST cell id, subvector riding inside the min struct exactly
-    like ``_nearest_cell``'s cosine twin.
-
-    Same Arrow-kernel design as :func:`_nearest_cell` (guide §4.2): the
-    row×cell L2 table is computed per batch in numpy with PER-DIMENSION
-    accumulation ``acc = acc + (x-y)*(x-y)`` — the identical IEEE
-    sequence as the ``_l2sq`` left fold, so distances are bit-identical
-    and the PQ oracles still hash-match. Spark min-struct ordering is
-    replicated: a NULL distance (NULL or dimension-mismatched
-    subvector) is the MINIMUM, NaN the maximum, ties fall to the
-    smallest cell id; per-row winners then collapse through the same
-    struct-min aggregation (min over per-row minima == min over all
-    pairs), keeping duplicate-key semantics unchanged."""
-    import numpy as np
-
-    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
-
+def _cb_by_sub(codebooks: DataFrame) -> dict[int, list[tuple[int, list[float]]]]:
     by_sub: dict[int, list[tuple[int, list[float]]]] = {}
-    for r in cb.select("sub", "cell", "cvec").collect():
+    for r in codebooks.select("sub", "cell", "cvec").collect():
         by_sub.setdefault(int(r["sub"]), []).append(
             (int(r["cell"]), [float(x) for x in r["cvec"]])
         )
     for cells in by_sub.values():
         cells.sort()
+    return by_sub
+
+
+def _nearest_subcell(long_df: DataFrame, cb: DataFrame) -> DataFrame:
+    """Per-(row, subspace) argmin-L2 codebook assignment — ties to the
+    SMALLEST cell id, subvector riding inside the min struct exactly
+    like ``_nearest_cell``'s cosine twin.
+
+    Same Arrow-kernel design as :func:`_nearest_cell_kernel` (guide
+    §4.2): the row×cell L2 table is computed per batch and subspace by
+    :func:`_argmin_l2` through :func:`_score_ragged` — bit-identical
+    distances, NULL distance the MINIMUM, NaN the maximum, ties to the
+    smallest cell; per-row winners then collapse through the same
+    struct-min aggregation (min over per-row minima == min over all
+    pairs), keeping duplicate-key semantics unchanged. Rows whose
+    subspace is absent from ``cb`` drop out (the inner join)."""
+    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+    by_sub = _cb_by_sub(cb)
 
     out_schema = StructType(
         [
@@ -891,59 +878,25 @@ def _nearest_subcell(long_df: DataFrame, cb: DataFrame) -> DataFrame:
     )
 
     def assign(batches):
-        import pandas as pd
+        import numpy as np
+        import pyarrow as pa
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            parts = []
-            for sub, g in pdf.groupby("sub", sort=False):
-                cells = by_sub.get(int(sub))
-                if not cells:
-                    continue  # inner join: subspaces absent from cb drop
-                n = len(g)
-                raw = list(g["sv"])
-                dims = {len(v) for v in raw if v is not None}
-                dim = max(dims) if dims else 0
-                bad = np.array(
-                    [v is None or len(v) != dim for v in raw], dtype=bool
+        for batch in batches:
+            subs = batch.column("sub").to_numpy(zero_copy_only=False)
+            svs = batch.column("sv").to_numpy(zero_copy_only=False)
+            for sub, cells in by_sub.items():
+                idx = np.flatnonzero(subs == sub)
+                if len(idx) == 0:
+                    continue
+                cell, d, is_null = _score_ragged(list(svs[idx]), cells, _argmin_l2)
+                part = batch.take(pa.array(idx))
+                yield pa.RecordBatch.from_arrays(
+                    [part.column("__pid__"), part.column("sub"), part.column("sv"),
+                     pa.array(d, mask=is_null), pa.array(cell.astype("int32"))],
+                    names=out_schema.names,
                 )
-                V = np.zeros((n, dim), dtype=np.float64)
-                for i, v in enumerate(raw):
-                    if not bad[i]:
-                        V[i, :] = v
-                # min-struct ordering: class 0 = NULL d (minimum),
-                # 2 = real, 3 = NaN (maximum)
-                best_cls = np.full(n, 4, dtype=np.int8)
-                best_d = np.full(n, np.nan)
-                best_cell = np.full(n, cells[0][0], dtype=np.int64)
-                for c_id, cv in cells:
-                    mismatch = bad | (len(cv) != dim)
-                    acc = np.zeros(n)
-                    for d in range(min(dim, len(cv))):
-                        t = V[:, d] - cv[d]
-                        acc = acc + t * t
-                    dd = np.where(mismatch, np.nan, acc)
-                    cls = np.where(
-                        mismatch, 0, np.where(np.isnan(dd), 3, 2)
-                    ).astype(np.int8)
-                    take = (cls < best_cls) | (
-                        (cls == best_cls) & (dd < best_d)
-                    )
-                    best_cls = np.where(take, cls, best_cls)
-                    best_d = np.where(take, dd, best_d)
-                    best_cell = np.where(take, c_id, best_cell)
-                out = g[["__pid__", "sub"]].copy()
-                out["sv"] = g["sv"]
-                d_col = pd.Series(best_d, index=g.index)
-                d_col[best_cls == 0] = None
-                out["__d__"] = d_col
-                out["__cell__"] = best_cell.astype("int32")
-                parts.append(out)
-            if parts:
-                yield pd.concat(parts)
 
-    scored = long_df.mapInPandas(assign, out_schema)
+    scored = long_df.mapInArrow(assign, out_schema)
     best = scored.groupBy("__pid__", "sub").agg(
         F.min(
             F.struct(
@@ -1079,139 +1032,56 @@ def _index_rows_kernel(
     with a single ``mapInPandas`` stage — zero shuffles, which is what
     the (row-local by construction) encode actually needs.
 
-    Bit-exactness contract — same as :func:`_nearest_cell_kernel` /
-    :func:`_nearest_subcell`, whose per-row logic this reuses verbatim:
-    per-dimension sequential accumulation (identical IEEE sequence as
-    the ``_l2sq`` / ``_dot`` left folds), L2 ties to the smallest cell,
-    NULL distance (NULL / dimension-mismatched subvector) is the
-    struct-min MINIMUM, NaN the maximum; cosine cell assignment uses the
-    struct-MAX ordering (NULL score smallest, NaN largest, ties to the
-    smallest cell).  Subvector slicing replicates ``_subvectors``:
-    ``v[j*dm : j*dm+dm]`` (short slices for short vectors, NULL vector →
-    every subvector NULL).  Subspaces absent from ``by_sub`` drop out of
-    the codes array (the composed form's inner join).
+    Bit-exactness contract — the coarse cell is
+    :func:`_argmax_cosine` and every code :func:`_argmin_l2`, both
+    through :func:`_score_ragged`: the same per-row semantics as
+    :func:`_nearest_cell_kernel` / :func:`_nearest_subcell`.  Subvector
+    slicing replicates ``_subvectors``: ``v[j*dm : j*dm+dm]`` (short
+    slices for short vectors, NULL vector → every subvector NULL).
+    Subspaces absent from ``by_sub`` drop out of the codes array (the
+    composed form's inner join).
 
     One output row per input row: callers must hold the documented
     unique-id contract (the composed form's groupBy collapse is the
     identity there)."""
-    import numpy as np
-
     from pyspark.sql.types import (
-        ArrayType, DoubleType, IntegerType, StructField, StructType,
+        ArrayType, IntegerType, StructField, StructType,
     )
 
     dm = dim // m
     subs = sorted(by_sub)
     fields = [df.schema[id_col]]
     if cent_rows is not None:
-        cell_ids = [int(r["cell"]) for r in cent_rows]
-        cvecs = [[float(x) for x in r["cvec"]] for r in cent_rows]
-        cnorms = [_pyfold_norm(v) for v in cvecs]
+        cells = [
+            (int(r["cell"]), [float(x) for x in r["cvec"]]) for r in cent_rows
+        ]
         fields.append(StructField("cell", IntegerType(), True))
     fields.append(StructField("codes", ArrayType(IntegerType(), True), True))
     out_schema = StructType(fields)
 
     def encode(batches):
-        import pandas as pd
-
         for pdf in batches:
-            n = len(pdf)
-            if n == 0 or (not subs and cent_rows is None):
+            if len(pdf) == 0 or (not subs and cent_rows is None):
                 continue
             raw = list(pdf[vec_col])
             out = pdf[[id_col]].copy()
-
             if cent_rows is not None:
-                # ---- coarse cell: _nearest_cell_kernel per-row logic ----
-                dims = {len(v) for v in raw if v is not None}
-                cdim = max(dims) if dims else 0
-                bad = np.array(
-                    [v is None or len(v) != cdim for v in raw], dtype=bool
-                )
-                V = np.zeros((n, cdim), dtype=np.float64)
-                for i, v in enumerate(raw):
-                    if not bad[i]:
-                        V[i, :] = v
-                acc = np.zeros(n)
-                for d in range(cdim):
-                    x = V[:, d]
-                    acc = acc + x * x
-                vn = np.sqrt(acc)
-                best_cls = np.full(n, -1, dtype=np.int8)
-                best_s = np.full(n, np.nan)
-                best_cell = np.full(
-                    n, cell_ids[0] if cell_ids else 0, dtype=np.int64
-                )
-                for c_id, cv, cn in zip(cell_ids, cvecs, cnorms):
-                    acc = np.zeros(n)
-                    for d in range(len(cv)):
-                        acc = acc + V[:, d] * cv[d]
-                    denom = vn * cn
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        s = acc / denom
-                    isnull = denom == 0.0
-                    s = np.where(isnull, np.nan, s)
-                    cls = np.where(
-                        isnull, 0, np.where(np.isnan(s), 3, 2)
-                    ).astype(np.int8)
-                    take = (cls > best_cls) | ((cls == best_cls) & (s > best_s))
-                    best_cls = np.where(take, cls, best_cls)
-                    best_s = np.where(take, s, best_s)
-                    best_cell = np.where(take, c_id, best_cell)
-                out["cell"] = best_cell.astype("int32")
-
-            # ---- PQ codes: _nearest_subcell per-row logic per subspace --
-            code_cols = []
-            for sub in subs:
-                cells = by_sub[sub]
-                svs = [
-                    None if v is None else list(v[sub * dm:sub * dm + dm])
-                    for v in raw
-                ]
-                sdims = {len(v) for v in svs if v is not None}
-                sdim = max(sdims) if sdims else 0
-                sbad = np.array(
-                    [v is None or len(v) != sdim for v in svs], dtype=bool
-                )
-                S = np.zeros((n, sdim), dtype=np.float64)
-                for i, v in enumerate(svs):
-                    if not sbad[i]:
-                        S[i, :] = v
-                b_cls = np.full(n, 4, dtype=np.int8)
-                b_d = np.full(n, np.nan)
-                b_cell = np.full(n, cells[0][0], dtype=np.int64)
-                for c_id, cv in cells:
-                    mismatch = sbad | (len(cv) != sdim)
-                    acc = np.zeros(n)
-                    for d in range(min(sdim, len(cv))):
-                        t = S[:, d] - cv[d]
-                        acc = acc + t * t
-                    dd = np.where(mismatch, np.nan, acc)
-                    cls = np.where(
-                        mismatch, 0, np.where(np.isnan(dd), 3, 2)
-                    ).astype(np.int8)
-                    take = (cls < b_cls) | ((cls == b_cls) & (dd < b_d))
-                    b_cls = np.where(take, cls, b_cls)
-                    b_d = np.where(take, dd, b_d)
-                    b_cell = np.where(take, c_id, b_cell)
-                code_cols.append(b_cell.astype("int32"))
+                cell = _score_ragged(raw, cells, _argmax_cosine)[0]
+                out["cell"] = cell.astype("int32")
+            code_cols = [
+                _score_ragged(
+                    [None if v is None else v[sub * dm:sub * dm + dm] for v in raw],
+                    by_sub[sub],
+                    _argmin_l2,
+                )[0].astype("int32")
+                for sub in subs
+            ]
             out["codes"] = (
                 [list(t) for t in zip(*code_cols)] if code_cols else None
             )
             yield out
 
     return df.select(id_col, vec_col).mapInPandas(encode, out_schema)
-
-
-def _cb_by_sub(codebooks: DataFrame) -> dict[int, list[tuple[int, list[float]]]]:
-    by_sub: dict[int, list[tuple[int, list[float]]]] = {}
-    for r in codebooks.select("sub", "cell", "cvec").collect():
-        by_sub.setdefault(int(r["sub"]), []).append(
-            (int(r["cell"]), [float(x) for x in r["cvec"]])
-        )
-    for cells in by_sub.values():
-        cells.sort()
-    return by_sub
 
 
 def pq_encode(
@@ -1237,6 +1107,38 @@ def pq_encode(
         # dropped from the inner join and no rows survived the regroup
         return out.limit(0)
     return out
+
+
+def _adc_tables(
+    queries: DataFrame, query_id: str, query_vec: str, cb: DataFrame,
+    dim: int, m: int, k_sub: int,
+) -> tuple[DataFrame, F.Column]:
+    """Per-query ADC lookup shared by :func:`pq_topk_adc` and
+    :func:`pq_topk_ivf_adc`: the (q_id, ptab) frame — each query's
+    (m × k_sub) subvector·codeword dot table flattened in (sub, cell)
+    order — and the Column scoring a ``codes`` row against it,
+    ``Σ_j ptab[j*k_sub + codes[j]]`` as an ordered left-to-right
+    ``aggregate`` (partition- and engine-deterministic floats)."""
+    qlong = queries.select(
+        F.col(query_id).alias("q_id"),
+        F.posexplode(_subvectors(query_vec, m, dim)).alias("sub", "qsv"),
+    )
+    tbl = qlong.join(F.broadcast(cb), on="sub").withColumn(
+        "__p__", _dot(F.col("qsv"), F.col("cvec"))
+    )
+    flat = tbl.groupBy("q_id").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("sub", "cell", "__p__"))),
+            lambda s: s["__p__"],
+        ).alias("ptab")
+    )
+    # two-arg transform lambda receives (element, index) — here that
+    # index IS the subspace id, used deliberately for the table lookup
+    partials = F.transform(
+        F.col("codes"),
+        lambda c, jx: F.element_at(F.col("ptab"), jx * k_sub + c + 1),
+    )
+    return flat, F.aggregate(partials, F.lit(0.0), lambda acc, v: acc + v)
 
 
 def pq_topk_adc(
@@ -1267,34 +1169,11 @@ def pq_topk_adc(
         corpus, corpus_id, corpus_vec, dim, m=m, k_sub=k_sub, n_iter=n_iter
     )
     codes = pq_encode(corpus, corpus_id, corpus_vec, cb, dim, m=m)
-    from upgini_spark.operators.binary import _dot
-
-    qlong = queries.select(
-        F.col(query_id).alias("q_id"),
-        F.posexplode(_subvectors(query_vec, m, dim)).alias("sub", "qsv"),
-    )
-    tbl = qlong.join(F.broadcast(cb), on="sub").withColumn(
-        "__p__", _dot(F.col("qsv"), F.col("cvec"))
-    )
-    flat = tbl.groupBy("q_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("sub", "cell", "__p__"))),
-            lambda s: s["__p__"],
-        ).alias("ptab")
-    )
-    # two-arg transform lambda receives (element, index) — here that
-    # index IS the subspace id, used deliberately for the table lookup
-    partials = F.transform(
-        F.col("codes"),
-        lambda c, jx: F.element_at(F.col("ptab"), jx * k_sub + c + 1),
-    )
+    flat, adc = _adc_tables(queries, query_id, query_vec, cb, dim, m, k_sub)
     scored = (
         codes.crossJoin(F.broadcast(flat))
         .filter(F.col("q_id") != F.col(corpus_id))
-        .withColumn(
-            "adc",
-            F.aggregate(partials, F.lit(0.0), lambda acc, v: acc + v),
-        )
+        .withColumn("adc", adc)
     )
     w = Window.partitionBy("q_id").orderBy(
         F.col("adc").desc(), F.col(corpus_id).asc()
@@ -1553,36 +1432,13 @@ def pq_topk_ivf_adc(
         .select("q_id", "cell")
     )
 
-    from upgini_spark.operators.binary import _dot
-
-    qlong = queries.select(
-        F.col(query_id).alias("q_id"),
-        F.posexplode(_subvectors(query_vec, m, dim)).alias("sub", "qsv"),
-    )
-    tbl = qlong.join(F.broadcast(cb), on="sub").withColumn(
-        "__p__", _dot(F.col("qsv"), F.col("cvec"))
-    )
-    flat = tbl.groupBy("q_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("sub", "cell", "__p__"))),
-            lambda s: s["__p__"],
-        ).alias("ptab")
-    )
-
+    flat, adc = _adc_tables(queries, query_id, query_vec, cb, dim, m, k_sub)
     # candidate fetch: equi-join on cell (each corpus row has ONE cell,
     # (q_id, cell) probes are distinct -> no duplicate pairs)
     cand = probes.join(idx, on="cell").filter(
         F.col("q_id") != F.col("n_id")
     )
-    # two-arg transform lambda receives (element, index) — the index IS
-    # the subspace id, used deliberately for the ADC table lookup
-    partials = F.transform(
-        F.col("codes"),
-        lambda c, jx: F.element_at(F.col("ptab"), jx * k_sub + c + 1),
-    )
-    scored = cand.join(F.broadcast(flat), on="q_id").withColumn(
-        "adc", F.aggregate(partials, F.lit(0.0), lambda acc, v: acc + v)
-    )
+    scored = cand.join(F.broadcast(flat), on="q_id").withColumn("adc", adc)
     w = Window.partitionBy("q_id").orderBy(
         F.col("adc").desc(), F.col("n_id").asc()
     )

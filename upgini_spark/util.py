@@ -13,7 +13,7 @@ def spread_scan(df: DataFrame, factor: int = 1) -> DataFrame:
     hashing, per-row array kernels, partial aggregation, exchange
     serialization — runs on one core while the rest of the cluster
     idles (guide §2.5 "input skew: one huge unsplittable file"). One
-    cheap round-robin shuffle of the raw rows buys full parallelism
+    cheap hash repartition on the full row buys full parallelism
     downstream.
 
     Scale-adaptive: the target is ``factor ×`` the session's default
